@@ -66,6 +66,19 @@ def current_version(table_dir: str) -> str | None:
         return None
 
 
+def is_committed(table_dir: str, upload_id: str) -> bool:
+    """Whether ``upload_id`` has committed to the table, per the append-
+    only ``_COMMITTED`` log: the pointer alone would let a retry of A
+    arriving after B regress the table to A. A pointer naming the id with
+    no log entry (crash before the append) heals the log."""
+    if upload_id in committed_ids(table_dir):
+        return True
+    if current_version(table_dir) == upload_id:
+        _record_commit(table_dir, upload_id)
+        return True
+    return False
+
+
 def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     """Resolve the pointer and read the live snapshot (None if no commit
     has ever succeeded — staged-but-uncommitted data is invisible)."""
@@ -81,19 +94,9 @@ def commit_overwrite(df: DataFrame, table_dir: str, upload_id: str) -> bool:
     Returns True if this call performed the commit, False if ``upload_id``
     was already committed (idempotent retry). The snapshot is fully written
     before the pointer moves; a crash at any point leaves the previous
-    version live.
-
-    Idempotency is checked against the append-only ``_COMMITTED`` log, not
-    just the live pointer: a retry of upload A arriving AFTER upload B has
-    committed must be a no-op, not a regression of the table to A. (The
-    pointer check alone would re-commit A — the reordered-retry hazard.)
+    version live. Idempotency follows :func:`is_committed`.
     """
-    if upload_id in committed_ids(table_dir):
-        return False
-    if current_version(table_dir) == upload_id:
-        # committed previously but the crash hit before the log append —
-        # heal the log so the id stays refused after later uploads move on
-        _record_commit(table_dir, upload_id)
+    if is_committed(table_dir, upload_id):
         return False
     staged = os.path.join(table_dir, _VERSIONS, upload_id)
     df.write.mode("overwrite").parquet(staged)
@@ -121,14 +124,13 @@ def commit_merge(
     publish the result under ``upload_id``. Idempotent per upload id."""
     from rudder_server_spark.operators.load import merge_into
 
-    if upload_id in committed_ids(table_dir) or current_version(table_dir) == upload_id:
+    if is_committed(table_dir, upload_id):
         return False
+    # no checkpoint needed: the merge reads the live snapshot while the
+    # write goes to _versions/<upload_id>, never the live one (the guard
+    # refused upload_id == current_version)
     existing = read_table(spark, table_dir)
     merged = merge_into(existing, staging, pk, order_col)
-    if existing is not None:
-        # the merged plan reads the live snapshot lazily; materialize before
-        # the pointer swap so the write never races its own input version
-        merged = merged.localCheckpoint(eager=True)
     return commit_overwrite(merged, table_dir, upload_id)
 
 

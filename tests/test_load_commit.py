@@ -205,3 +205,31 @@ def test_run_source_job_delete_sweep(spark, tmp_path):
     # unknown job type rejected (worker.go:615 invalid sourceJob type)
     with pytest.raises(ValueError):
         run_source_job(spark, wh, ["tracks"], {**job, "async_job_type": "sync"})
+
+
+def test_commit_merge_caches_nothing(spark, tmp_path):
+    """A MERGE into a live table writes the merged plan directly: it leaves
+    no persisted (checkpointed) RDD behind."""
+    t = str(tmp_path / "users")
+    schema = "id string, received_at string, val string"
+    commit_merge(spark, spark.createDataFrame([("a", "2024-01-01", "v1")], schema), t, "u1")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    staging = spark.createDataFrame([("a", "2024-02-01", "v2")], schema)
+    assert commit_merge(spark, staging, t, "u2") is True
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert [r["val"] for r in read_table(spark, t).collect()] == ["v2"]
+
+
+def test_is_committed_heals_log_from_pointer(tmp_path):
+    """A crash between the pointer swap and the log append: the pointer
+    names the id, the log does not. is_committed refuses the id and heals
+    the log, so a later upload cannot let it re-commit."""
+    from rudder_server_spark.sources.load_commit import committed_ids, is_committed
+
+    t = tmp_path / "tracks"
+    t.mkdir()
+    (t / "_CURRENT").write_text("up-1")
+    assert not committed_ids(str(t))
+    assert is_committed(str(t), "up-1")
+    assert committed_ids(str(t)) == {"up-1"}
+    assert not is_committed(str(t), "up-2")

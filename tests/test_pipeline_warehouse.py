@@ -5,6 +5,9 @@ a re-run of a committed upload must be a no-op,
 processor.go:2835-3098 / state_update_table_uploads.go)."""
 
 import datetime as dt
+import os
+
+import pytest
 
 from rudder_server_spark.pipeline_warehouse import run_warehouse_upload
 from rudder_server_spark.sources import load_commit
@@ -137,3 +140,157 @@ def test_bq_zero_violation_upload_writes_no_discards_table(spark, tmp_path):
         spark, str(tmp_path / "whbq_clean" / "rudder_identity_merge_rules")
     )
     assert rules.count() == 2
+
+
+def _mixed_batch(spark):
+    """Tracks and merges: standard, per-event and identity tables."""
+    return spark.createDataFrame(
+        [_track(0, 10.0), _track(1, 11.0), _merge_event(2, "a@example.com"),
+         _merge_event(3, "b@example.com")],
+        SCHEMA,
+    )
+
+
+def _counts(out):
+    return {r["table_name"]: r["n"] for r in out["counts"].collect()}
+
+
+@pytest.mark.parametrize("failing", ["tracks", "rudder_identity_mappings"])
+def test_failed_table_commit_retries_only_missing_tables(
+    spark, tmp_path, monkeypatch, failing
+):
+    """One table's commit fails mid-upload: the upload raises, every other
+    table is either fully landed or untouched, and re-running the same
+    upload id commits exactly the tables that had not landed."""
+    clean = run_warehouse_upload(
+        spark, _mixed_batch(spark), str(tmp_path / "clean"), "up-1"
+    )
+    assert failing in clean["tables"] and len(clean["tables"]) > 2
+    wh = str(tmp_path / "wh")
+    real_merge = load_commit.commit_merge
+
+    def failing_merge(spark_, df, tdir, upload_id, **kw):
+        if os.path.basename(tdir) == failing:
+            raise RuntimeError("simulated load failure")
+        return real_merge(spark_, df, tdir, upload_id, **kw)
+
+    monkeypatch.setattr(load_commit, "commit_merge", failing_merge)
+    with pytest.raises(RuntimeError, match="simulated load failure"):
+        run_warehouse_upload(spark, _mixed_batch(spark), wh, "up-1")
+    monkeypatch.setattr(load_commit, "commit_merge", real_merge)
+
+    landed = set()
+    for name in clean["tables"]:
+        tdir = os.path.join(wh, name)
+        if load_commit.current_version(tdir) == "up-1":
+            assert "up-1" in load_commit.committed_ids(tdir)
+            landed.add(name)
+        else:  # untouched: nothing live, nothing logged
+            assert load_commit.current_version(tdir) is None
+            assert not load_commit.committed_ids(tdir)
+    assert failing not in landed
+
+    retry = run_warehouse_upload(spark, _mixed_batch(spark), wh, "up-1")
+    assert retry["tables"] == clean["tables"]
+    assert {n for n, c in retry["committed"].items() if c} == (
+        set(clean["tables"]) - landed
+    )
+    assert _counts(retry) == _counts(clean)
+
+
+def test_replay_skips_identity_resolution(spark, tmp_path, monkeypatch):
+    """A replayed upload never resolves a landed table's frame: the mappings
+    connected-components loop does not run, and the counts are unchanged."""
+    from rudder_server_spark.operators import event_tables
+
+    wh = str(tmp_path / "wh")
+    calls = []
+    real_cc = event_tables.connected_components
+
+    def counting_cc(*args, **kwargs):
+        calls.append(1)
+        return real_cc(*args, **kwargs)
+
+    monkeypatch.setattr(event_tables, "connected_components", counting_cc)
+    first = run_warehouse_upload(spark, _mixed_batch(spark), wh, "up-1")
+    assert calls  # the cold upload resolves identities
+    calls.clear()
+    replay = run_warehouse_upload(spark, _mixed_batch(spark), wh, "up-1")
+    assert calls == []
+    assert not any(replay["committed"].values())
+    assert _counts(replay) == _counts(first)
+
+
+def test_commit_tables_order_and_failure_settle(tmp_path):
+    """The scheduler without Spark: merge rules run alone first, the first
+    standard table runs alone before the other standard tables start, a
+    landed table's frame is never resolved, and a failure re-raises only
+    after every submitted task has finished."""
+    import threading
+    import time
+
+    from rudder_server_spark.pipeline_warehouse import commit_tables
+
+    names = ["tracks", "pages", "users", "rudder_identity_merge_rules",
+             "rudder_identity_mappings", "aliases"]
+    tables = {n: f"frame-{n}" for n in names}
+    (tmp_path / "aliases").mkdir()
+    (tmp_path / "aliases" / "_COMMITTED").write_text("up-1\n")
+    log, lock = [], threading.Lock()
+
+    def task(name, df, tdir):
+        with lock:
+            log.append(("start", name, df))
+        time.sleep(0.05)
+        if name == "pages":
+            raise RuntimeError("boom")
+        with lock:
+            log.append(("end", name, df))
+        return name
+
+    with pytest.raises(RuntimeError, match="boom"):
+        commit_tables(tables, str(tmp_path), task, upload_id="up-1")
+    pos = {(ev, n): i for i, (ev, n, _) in enumerate(log)}
+    assert ("start", "aliases", None) in log  # landed: never resolved
+    assert all(df == f"frame-{n}" for _, n, df in log if n != "aliases")
+    rules_end = pos[("end", "rudder_identity_merge_rules")]
+    assert all(pos[("start", n)] > rules_end for n in names
+               if n not in ("aliases", "rudder_identity_merge_rules"))
+    assert pos[("start", "pages")] > pos[("end", "tracks")]
+    assert pos[("start", "users")] > pos[("end", "tracks")]
+    # every submitted task settled before the error surfaced
+    assert ("end", "users") in pos and ("end", "rudder_identity_mappings") in pos
+
+
+def test_commit_tables_resolves_each_lazy_table_once():
+    """Stress: more tables than pool threads, a lazy fan-out mapping and a
+    tiny switch interval. Every deferred frame builds exactly once and
+    every result comes back, in table order."""
+    import collections
+    import sys
+    import threading
+
+    from rudder_server_spark.operators.event_tables import _LazyTables
+    from rudder_server_spark.pipeline_warehouse import commit_tables
+
+    builds, lock = collections.Counter(), threading.Lock()
+
+    def thunk(n):
+        def build():
+            with lock:
+                builds[n] += 1
+            return n
+        return build
+
+    names = [f"t{i:02d}" for i in range(40)] + [
+        "rudder_identity_merge_rules", "rudder_identity_mappings"]
+    tables = _LazyTables({}, {n: thunk(n) for n in names})
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = commit_tables(tables, "unused", lambda name, df, tdir: (name, df))
+    finally:
+        sys.setswitchinterval(old)
+    assert list(out) == names
+    assert all(out[n] == (n, n) for n in names)
+    assert builds == dict.fromkeys(names, 1)
