@@ -34,18 +34,30 @@ class _LazyTables(Mapping):
     access (those whose CONSTRUCTION runs Spark jobs, e.g. the iterative
     identity resolution), and whose KEY SET may itself be partly discovered
     on demand (the per-event tables: listing them runs a distinct scan —
-    callers that only touch fixed tables like ``tracks`` never pay it)."""
+    callers that only touch fixed tables like ``tracks`` never pay it).
+    The same scan proves some fixed tables empty: see ``empty``."""
 
     def __init__(self, ready: dict, deferred: dict, discover=None):
         self._ready = ready
         self._deferred = deferred
-        self._discover = discover  # () -> dict of extra deferred entries
+        # () -> (extra deferred entries, names of provably empty tables)
+        self._discover = discover
+        self._empty: frozenset = frozenset()
 
     def _discover_now(self):
         if self._discover is not None:
-            extra, self._discover = self._discover(), None
+            (extra, empty), self._discover = self._discover(), None
+            self._empty = frozenset(empty)
             for k, thunk in extra.items():
                 self._deferred.setdefault(k, thunk)
+
+    def empty(self) -> frozenset:
+        """Names of tables the discovery census proved to have no rows (no
+        input row of the event types they are built from). They stay in
+        the key set; a writer may skip them, since landing zero rows is a
+        no-op. Runs the census if the key set was not listed yet."""
+        self._discover_now()
+        return self._empty
 
     def __getitem__(self, key):
         if key not in self._ready:
@@ -169,6 +181,14 @@ def fanout_flat_schema(per_alias: dict) -> list:
     return schema
 
 
+# the event types each identity_merge_rules source draws rules from
+_RULE_SOURCE_TYPES = {
+    "merge": ("merge",),
+    "alias": ("alias",),
+    "default": ("track", "identify", "page", "screen", "group"),
+}
+
+
 def identity_merge_rules(
     df: DataFrame,
     payload_col: str = "payload",
@@ -233,7 +253,7 @@ def identity_merge_rules(
         uid = F.col("user_id").cast("string")
         both = ne(anon) & ne(uid)
         parts.append(
-            df.where(et.isin("track", "identify", "page", "screen", "group"))
+            df.where(et.isin(*_RULE_SOURCE_TYPES["default"]))
             .where(ne(anon) | ne(uid))
             .select(
                 F.when(ne(anon), F.lit("anonymous_id")).otherwise(F.lit("user_id"))
@@ -333,7 +353,9 @@ def event_table_fanout(
 ) -> dict[str, DataFrame]:
     """Fan an envelope+payload event frame out into warehouse tables.
 
-    Returns ``{table_name: DataFrame}``. ``df`` must carry the envelope
+    Returns ``{table_name: DataFrame}``; its ``empty()`` names the fixed
+    tables ``df`` has no rows for, decided by the same job that lists the
+    per-event tables. ``df`` must carry the envelope
     columns of FIXTURES.md §2 (message_id, user_id, anonymous_id,
     event_type, event_name, received_at, sent_at, original_timestamp) and a
     JSON ``payload`` column. Pass ``schemas`` (from
@@ -504,20 +526,40 @@ def event_table_fanout(
 
         return build
 
-    def _discover_event_tables() -> dict:
+    # fixed table → the event types its rows come from: a batch with none
+    # of them provably leaves the table empty
+    sources_of = {tbl: (etype,) for etype, tbl in _PLURAL.items()}
+    sources_of["users"] = ("identify",)
+    rule_types = tuple(
+        t for src in identity_rule_sources for t in _RULE_SOURCE_TYPES.get(src, ())
+    )
+    sources_of["rudder_identity_merge_rules"] = rule_types
+    sources_of["rudder_identity_mappings"] = rule_types
+
+    def _discover_event_tables() -> tuple[dict, set]:
+        et = F.col("event_type")
         types = ["track", "extract"] if has_record_id else ["track"]
-        # LIMIT cap+1 bounds the driver collect BY CONSTRUCTION: a rogue
-        # source emitting per-event unique names (uuid event_name) would
-        # otherwise OOM the driver here and fan out a million tables — the
-        # reference's per-event-name table model has the same hazard and
-        # callers are expected to cap it (VERDICT r3 #3)
-        name_rows = (
-            env.where(F.col("event_type").isin(types))
-            .select("event_type", "event_name")
+        census_types = [*_PLURAL, "merge", "extract"]
+        # ONE distinct over every event type: the (type, name) pairs name
+        # the per-event tables, the types alone prove fixed tables empty.
+        # Names ride along only for track/extract rows and unknown types
+        # fold into one NULL row, so at most len(census_types) + 1 rows
+        # are not per-event names. LIMIT cap+1 (+ those rows) bounds the
+        # driver collect BY CONSTRUCTION: a rogue source emitting
+        # per-event unique names (uuid event_name) would otherwise OOM the
+        # driver here and fan out a million tables — the reference's
+        # per-event-name table model has the same hazard and callers are
+        # expected to cap it (VERDICT r3 #3)
+        census = (
+            env.select(
+                F.when(et.isin(census_types), et).alias("event_type"),
+                F.when(et.isin(types), F.col("event_name")).alias("event_name"),
+            )
             .distinct()
-            .limit(max_event_tables + 1)
+            .limit(max_event_tables + len(census_types) + 2)
             .collect()
         )
+        name_rows = [r for r in census if r["event_type"] in types]
         if len(name_rows) > max_event_tables:
             raise ValueError(
                 f"event-table discovery found more than max_event_tables="
@@ -529,6 +571,8 @@ def event_table_fanout(
                 "max_event_tables consciously or pre-filter/quarantine the "
                 "offending source before fan-out"
             )
+        present = {r["event_type"] for r in census}
+        empty = {tbl for tbl, ts in sources_of.items() if present.isdisjoint(ts)}
         # two raw names can normalize to the same table ('Order Completed'
         # and 'order_completed' both land in order_completed — the reference
         # keys the physical table by the snake_cased name), so group names
@@ -551,7 +595,7 @@ def event_table_fanout(
 
         out = {tbl: make(evs) for tbl, evs in sorted(by_table.items())}
         out.update({tbl: make_extract(evs) for tbl, evs in sorted(ex_by_table.items())})
-        return out
+        return out, empty
 
     # ---- identifies + users -------------------------------------------
     trait_renames = []
@@ -731,6 +775,11 @@ _PLURAL = {
     "track": "tracks", "identify": "identifies", "page": "pages",
     "screen": "screens", "group": "groups", "alias": "aliases",
 }
+# every table event_table_fanout lists whatever the input; the per-event
+# tables come on top
+FIXED_TABLES = (
+    *_PLURAL.values(), "users", "rudder_identity_merge_rules", "rudder_identity_mappings",
+)
 
 
 def fanout_table_counts(df: DataFrame, payload_col: str = "payload") -> DataFrame:

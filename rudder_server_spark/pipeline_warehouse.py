@@ -14,9 +14,13 @@ atomic pointer-swap snapshots, so a crash between any two steps leaves
 the previous versions live and a REPLAYED upload id is a no-op.
 
 Scale: fan-out parses each payload once against registry schemas; every
-table MERGE keys on its own primary key (one shuffle per table). The
-tables commit concurrently through ``commit_tables``, the scheduler the
-streaming sinks share, at most six at a time: identity merge rules
+table MERGE keys on its own primary key (one shuffle per table). Only
+tables the batch has rows for are landed: the fan-out's one census job
+(the distinct that lists the per-event tables) also proves which fixed
+tables are empty, and those are never resolved, merged or rewritten —
+an upload without merge events leaves both identity tables untouched.
+The rest commit concurrently through ``commit_tables``, the scheduler
+the streaming sinks share, at most six at a time: identity merge rules
 first and alone, then the mappings table's connected-components loop in
 the pool while the first standard table commits alone, then the rest.
 The commit itself is metadata (pointer files), never a data rewrite
@@ -56,7 +60,8 @@ def run_warehouse_upload(
     table. Returns {"tables": [names], "committed": {name: bool — False
     when the upload id had already landed (idempotent replay)},
     "counts": lazy (table_name, n) DataFrame of LANDED post-merge sizes
-    (the A6 completeness check)}.
+    (the A6 completeness check)}. A table the batch has no rows for is
+    not landed and appears in none of the three.
     """
     deduped = batch_dedup(
         events, record_id="record_id" if "record_id" in events.columns else None
@@ -77,10 +82,13 @@ def run_warehouse_upload(
         return committed, count
 
     done = commit_tables(tables, warehouse_dir, commit, upload_id, destination_type)
+    counts = [c for _, c in done.values()]
     return {
         "tables": sorted(done),
         "committed": {n: c for n, (c, _) in done.items()},
-        "counts": functools.reduce(DataFrame.unionAll, (c for _, c in done.values())),
+        "counts": functools.reduce(DataFrame.unionAll, counts)
+        if counts
+        else spark.createDataFrame([], "table_name string, n bigint"),
     }
 
 
@@ -92,9 +100,14 @@ def commit_tables(
     destination_type: str | None = None,
 ) -> dict[str, object]:
     """Run ``task(name, df, out_dir/name)`` for every fan-out table of one
-    upload, concurrently; returns ``{name: result}`` in table order. A
-    table ``upload_id`` already committed to is never resolved (``df`` is
-    None), so a replay skips the mappings connected-components loop.
+    upload that can have rows, concurrently; returns ``{name: result}`` in
+    table order. A table the fan-out's census proved empty (``empty()`` on
+    the mapping: no rows of its event types) is never resolved, committed
+    or returned — its landed state is what a MERGE of zero rows would
+    leave (worker_job.go:592-615 writes load files only for tables the
+    staging batch has rows for). A table ``upload_id`` already committed
+    to is never resolved (``df`` is None), so a replay skips the mappings
+    connected-components loop.
 
     Merge rules run alone first, forcing the rules checkpoint mappings
     shares; the other identity tables then enter the pool ahead of the
@@ -104,6 +117,11 @@ def commit_tables(
     settles before the first error is re-raised; unsubmitted tables stay
     untouched.
     """
+    # listing the keys runs the fan-out's one census job, which also
+    # decides emptiness
+    names = list(tables)
+    if hasattr(tables, "empty"):
+        names = [n for n in names if n not in tables.empty()]
     # index-length constraints (warehouse/constraints/constraint.go via
     # slave/worker.go:404-446): on BQ/Snowflake the identity merge-rules
     # index caps the concatenated type||value at 512 bytes — violating
@@ -113,7 +131,7 @@ def commit_tables(
     overrides: dict[str, DataFrame] = {}
     if (
         destination_type in INDEX_CONSTRAINTS
-        and "rudder_identity_merge_rules" in tables
+        and "rudder_identity_merge_rules" in names
     ):
         loaded, discards = apply_index_constraints(
             tables["rudder_identity_merge_rules"],
@@ -125,14 +143,15 @@ def commit_tables(
         # discard rows exist — a zero-violation upload must not commit an
         # empty rudder_discards table (the emptiness probe is a narrow
         # filter over the small merge-rules frame, not a corpus scan)
-        if "rudder_discards" in tables:
+        if "rudder_discards" in names:
             overrides["rudder_discards"] = tables["rudder_discards"].unionByName(
                 discards, allowMissingColumns=True
             )
         elif not discards.isEmpty():
             overrides["rudder_discards"] = discards
-    names = list(tables)
     names += [n for n in overrides if n not in names]
+    if not names:
+        return {}
     landed = [
         n for n in names
         if upload_id is not None

@@ -462,6 +462,8 @@ def q18(spark, sf):
         # table-upload counts read jobsdb state, not the warehouse).
         import pyarrow.parquet as _pq
 
+        from rudder_server_spark.operators.event_tables import FIXED_TABLES
+
         names = sorted(os.listdir(out))
         counts = {}
         for n in names:
@@ -471,6 +473,9 @@ def q18(spark, sf):
                 for f in os.listdir(tdir)
                 if f.endswith(".parquet")
             )
+        # the sink writes no files for a table the stream had no rows for;
+        # it still reports as 0, like the oracle's count over no rows
+        names = sorted(set(names) | set(FIXED_TABLES))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         spark.conf.set(

@@ -19,6 +19,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at half the host's physical memory: the heap is
+    committed up front (-Xms + AlwaysPreTouch below), so a heap the host
+    cannot back keeps the JVM from starting at all."""
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "24g"
+    return f"{min(24 * 1024, total_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "rudder_server_spark",
     master: str | None = None,
@@ -27,6 +38,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the SparkSession used across the engine."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     b = (
@@ -44,7 +56,7 @@ def get_spark(
         # py4j round-trips → ~12k). Debug sugar, off in production; flip
         # on when chasing a plan-origin error message.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver fixtures write TIMESTAMP(NANOS) parquet, which Spark
@@ -98,7 +110,7 @@ def get_spark(
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing "
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} -XX:+AlwaysPreTouch",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
     )
     if extra_conf:

@@ -139,8 +139,10 @@ def warehouse_sink(
     frame, run concurrently by the batch upload's scheduler
     (pipeline_warehouse.commit_tables) — the concurrent-upload shape of
     the reference's per-table warehouse loaders (warehouse/router.go
-    worker pool); on local mode the sink costs ~2 job latencies, not
-    O(n_tables).
+    worker pool). Only tables the micro-batch has rows for are written:
+    the fan-out's census job proves the others empty, so a batch without
+    screen, group, alias or merge events creates no files for those
+    tables and pays no write job for them.
     """
     from rudder_server_spark.operators.event_tables import event_table_fanout
 
@@ -450,7 +452,8 @@ def transactional_warehouse_sink(out_dir: str):
 
     Tables commit concurrently through the batch upload's scheduler
     (pipeline_warehouse.commit_tables); a table the epoch already
-    committed to is skipped before its frame is built.
+    committed to, or one the epoch has no rows for, is skipped before its
+    frame is built.
     """
     from rudder_server_spark.operators.event_tables import event_table_fanout
     from rudder_server_spark.sources.load_commit import (
@@ -460,11 +463,13 @@ def transactional_warehouse_sink(out_dir: str):
     )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # checkpoint first, probe second: the stateful plan runs once (see
+        # warehouse_sink)
+        batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         upload_id = f"epoch-{epoch_id:020d}"
-        batch_df = batch_df.localCheckpoint(eager=True)
 
         def commit(name: str, table: DataFrame | None, tdir: str) -> None:
             if table is None:

@@ -294,3 +294,85 @@ def test_commit_tables_resolves_each_lazy_table_once():
     assert list(out) == names
     assert all(out[n] == (n, n) for n in names)
     assert builds == dict.fromkeys(names, 1)
+
+
+def test_commit_tables_with_nothing_to_commit():
+    """No table to commit (an empty mapping, or one whose every table the
+    census proved empty) returns {} without starting a pool or touching a
+    frame."""
+    from rudder_server_spark.operators.event_tables import _LazyTables
+    from rudder_server_spark.pipeline_warehouse import commit_tables
+
+    def task(name, df, tdir):
+        raise AssertionError(f"{name} committed")
+
+    def never():
+        raise AssertionError("frame resolved")
+
+    assert commit_tables({}, "unused", task) == {}
+    tables = _LazyTables(
+        {}, {"tracks": never, "screens": never},
+        discover=lambda: ({"order_completed": never}, {"tracks", "screens", "order_completed"}),
+    )
+    assert commit_tables(tables, "unused", task, upload_id="up-1",
+                         destination_type="BQ") == {}
+
+
+def _tree(tdir):
+    """Every file under a table directory with its bytes."""
+    out = {}
+    for root, _, files in os.walk(tdir):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, tdir)] = fh.read()
+    return out
+
+
+def test_upload_without_merge_events_leaves_identity_tables_untouched(spark, tmp_path):
+    """A MERGE upload with no merge events lands no identity table: their
+    _CURRENT, _versions/ and _COMMITTED stay byte-identical (what merging
+    zero rows would leave), the upload reports neither, and a replay of
+    it still commits nothing."""
+    wh = str(tmp_path / "wh")
+    run_warehouse_upload(spark, _mixed_batch(spark), wh, "up-1")
+    identity = ("rudder_identity_merge_rules", "rudder_identity_mappings")
+    before = {n: _tree(os.path.join(wh, n)) for n in identity}
+    assert all(any(k.startswith("_versions") for k in t) for t in before.values())
+
+    tracks_only = spark.createDataFrame([_track(5, 1.0), _track(6, 2.0)], SCHEMA)
+    out = run_warehouse_upload(spark, tracks_only, wh, "up-2")
+    assert out["tables"] == ["order_completed", "tracks"]
+    assert all(out["committed"].values())
+    assert _counts(out) == {"order_completed": 4, "tracks": 4}
+    assert {n: _tree(os.path.join(wh, n)) for n in identity} == before
+
+    replay = run_warehouse_upload(spark, tracks_only, wh, "up-2")
+    assert replay["tables"] == out["tables"]
+    assert not any(replay["committed"].values())
+    assert {n: _tree(os.path.join(wh, n)) for n in identity} == before
+
+
+def test_fanout_lists_every_fixed_table(spark):
+    """The census only marks tables empty: the key set still holds every
+    fixed table, an empty one still resolves to a zero-row frame, and
+    empty() names exactly the tables without rows of their event types."""
+    from rudder_server_spark.operators.event_tables import (
+        FIXED_TABLES,
+        event_table_fanout,
+    )
+
+    tables = event_table_fanout(_mixed_batch(spark))
+    assert set(FIXED_TABLES) <= set(tables)
+    assert "order_completed" in tables
+    assert tables.empty() == {
+        "identifies", "users", "pages", "screens", "groups", "aliases",
+    }
+    assert tables["screens"].count() == 0
+    # the default rule source draws identity rules from every standard type
+    default = event_table_fanout(
+        spark.createDataFrame([_track(0, 1.0)], SCHEMA),
+        identity_rule_sources=("default",),
+    )
+    assert "rudder_identity_mappings" not in default.empty()
+    assert "identifies" in default.empty()

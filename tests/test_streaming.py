@@ -80,6 +80,31 @@ def test_warehouse_stream_dedup_and_fanout(spark, tmp_path):
     assert tracks3.select("id").distinct().count() == 11
 
 
+def test_warehouse_stream_writes_only_tables_with_rows(spark, tmp_path):
+    """A micro-batch writes only the tables it has rows for: tracks,
+    identifies and pages create no screens, groups, aliases or identity
+    directories; a later batch carrying a screen event creates screens."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    _write_events(
+        src, [_event(0), _event(1, etype="identify"), _event(2, etype="page")]
+    )
+    q = run_warehouse_pipeline(spark, src, out, ckpt)
+    q.awaitTermination(120)
+    assert sorted(os.listdir(out)) == [
+        "identifies", "order_completed", "pages", "tracks", "users",
+    ]
+
+    _write_events(src, [_event(3, etype="screen")], fname="part-1.json")
+    q2 = run_warehouse_pipeline(spark, src, out, ckpt)
+    q2.awaitTermination(120)
+    assert "screens" in os.listdir(out)
+    assert spark.read.parquet(os.path.join(out, "screens")).count() == 1
+    assert not {"groups", "aliases", "rudder_identity_merge_rules",
+                "rudder_identity_mappings"} & set(os.listdir(out))
+
+
 def _drain(spark, out, deliver, max_attempts):
     """Empty router tick: picks up due retries only (idempotent when the
     retry queue is empty). Production runs these on the trigger cadence."""
